@@ -15,11 +15,11 @@ Scale notes (10^12 files / 1000 executors):
 - postings are bucketed by ``hash(term) % term_buckets``: the query path
   prunes to the buckets of its query terms, and resume re-runs only
   missing buckets.
-- hot terms (df > hot_term_df_ratio * N) are pre-aggregated with a salt
-  key then re-aggregated, bounding the largest reducer
-  (SURVEY.md §4 item 3).  The groupBy itself is already partial-agg'd
-  map-side by Catalyst; salting additionally caps the final-agg key width
-  for pathological terms (``the``/``license`` in code corpora).
+- hot terms (``the``/``license`` in code corpora) need no salting here:
+  the tf groupBy is keyed by (term, doc) and partial-agg'd map-side by
+  Catalyst, so no reducer concentrates on one term (SURVEY.md §4 item 3).
+  Aggregations keyed by the bare term whose state grows with df use the
+  salted two-level plan in ``index.skew.salted_posting_arrays``.
 """
 
 from __future__ import annotations

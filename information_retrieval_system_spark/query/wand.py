@@ -7,7 +7,8 @@ an EXACT block-max scheme (SURVEY.md §2.5 O5, §4 item 1):
 - posting blocks are doc-range aligned across terms (compression.py), so
   one cogroup on ``block_id`` yields, per doc range, every query term's
   postings plus the range's doc lengths — doc-at-a-time scoring without
-  a global sort;
+  a global sort.  A whole query set runs through the same kernel with a
+  ``(qid, block_id)`` cogroup key;
 - per-range upper bound: ``ub(range) = Σ_t idf_t · max_tf·(k1+1) /
   (max_tf + k1·(1-b))`` — since ``dl ≥ 0`` and the BM25 term score is
   monotone increasing in tf and decreasing in dl, this dominates every
@@ -17,7 +18,8 @@ an EXACT block-max scheme (SURVEY.md §2.5 O5, §4 item 1):
   opportunistic but SAFE: the final global k-th best is ≥ any worker's
   current k-th best, so skipped ranges can never contain a final top-k
   doc.  Negative-idf terms (df > N/2, common in tiny corpora) contribute
-  their negative minimum to the bound, keeping it an upper bound;
+  0 to the bound (their term score is negative everywhere), keeping it
+  an upper bound;
 - each cogroup task emits at most k rows; the global
   ``orderBy(score desc, doc_id asc).limit(k)`` merge is Spark's
   TakeOrderedAndProject — per-partition top-k + k-row driver merge.
@@ -31,6 +33,7 @@ pandas construction cost halved the batch path in the r7 A/B).
 from __future__ import annotations
 
 import heapq
+import uuid
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
@@ -39,7 +42,8 @@ from ..config import DEFAULT_CONFIG, EngineConfig
 from ..index.builder import IndexTables
 from ..index.compression import DEFAULT_BLOCK_SPAN, vbyte_decode
 
-# per-worker shared pruning state: {query_key: heap of best scores (size<=k)}
+# per-worker shared pruning state: {"<invocation>:<qid>": heap of best
+# scores (size<=k)}
 _THRESH: dict[str, list[float]] = {}
 
 # per-worker decode memos keyed by the ENCODED bytes themselves: in a
@@ -101,20 +105,29 @@ def collect_query_term_rows(terms: DataFrame, qset: list[str],
     return terms.filter(F.col("term").isin(list(qset))).select(*sel).collect()
 
 
-def _empty_cell(with_qid: bool):
-    import pyarrow as pa
-
-    cols = {"doc_int": pa.array([], pa.int64()),
-            "score": pa.array([], pa.float64())}
-    if with_qid:
-        cols = {"qid": pa.array([], pa.int64()), **cols}
-    return pa.table(cols)
+def _idf(n: int, df: float) -> float:
+    return float(np.log2((n - df + 0.5) / (df + 0.5)))
 
 
-def _kernel_factory(term_stats: dict[str, tuple[float, float]], k: int,
+def _query_term_rows(terms: DataFrame, qterms: list[str], blocks: DataFrame,
+                     term_buckets: int | None, precollected_trows: list | None) -> list:
+    """(term, df[, tb]) rows for ``qterms``: filtered from the rows a
+    router already collected, else one driver job."""
+    if precollected_trows is None:
+        return collect_query_term_rows(terms, qterms, blocks, term_buckets)
+    qs = set(qterms)
+    return [r for r in precollected_trows if r.term in qs]
+
+
+def _kernel_factory(stats_by_qid: dict[int, dict[str, float]], k: int,
                     k1: float, b: float, avgdl: float, span: int, qkey: str):
-    """term_stats: term -> (idf, tf_ub_factor) where the block ub is
-    idf>0 ? idf * max_tf*(k1+1)/(max_tf+k1*(1-b)) : idf * small_tf_bound.
+    """stats_by_qid: qid -> {term: idf}.  The cogroup key is
+    ``(block_id,)`` for a single query (scored as qid 0) or
+    ``(qid, block_id)`` for a batch; every cell returns
+    ``(qid, doc_int, score)``, at most k rows.
+
+    A term's block upper bound is idf * max_tf*(k1+1)/(max_tf+k1*(1-b))
+    (dl = 0 maximizes the BM25 term score); negative-idf terms bound at 0.
 
     Arrow-native (``applyInArrow``): each cogroup cell arrives as a
     pyarrow Table and never round-trips through a pandas block manager —
@@ -123,13 +136,19 @@ def _kernel_factory(term_stats: dict[str, tuple[float, float]], k: int,
     r7 A/B (11.7 s -> 5.9 s, identical output)."""
     import pyarrow as pa
 
+    schema = pa.schema([("qid", pa.int64()), ("doc_int", pa.int64()),
+                        ("score", pa.float64())])
+    empty = schema.empty_table()
+
     def kernel(key, pblocks, dlblock):
         if pblocks.num_rows == 0 or dlblock.num_rows == 0:
-            return _empty_cell(False)
-
-        if len(_THRESH) > 64:  # bound per-worker state across queries
+            return empty
+        qid = int(key[0].as_py()) if len(key) > 1 else 0
+        block = int(key[-1].as_py())
+        idfs = stats_by_qid[qid]
+        if len(_THRESH) > 4096:  # bound per-worker state across queries
             _THRESH.clear()
-        heap = _THRESH.setdefault(qkey, [])
+        heap = _THRESH.setdefault(f"{qkey}:{qid}", [])
         theta = heap[0] if len(heap) >= k else -np.inf
 
         # --- block-max upper bound for this doc range ------------------
@@ -139,16 +158,17 @@ def _kernel_factory(term_stats: dict[str, tuple[float, float]], k: int,
         rows_term = pblocks.column("term").to_pylist()
         contribs = []
         for term, max_tf in zip(rows_term, pblocks.column("max_tf").to_pylist()):
-            idf, _ = term_stats[term]
+            idf = idfs[term]
             mt = float(max_tf)
-            c = idf * mt * (k1 + 1.0) / (mt + k1 * (1.0 - b)) if idf >= 0.0 else 0.0
-            contribs.append(c)
+            contribs.append(
+                idf * mt * (k1 + 1.0) / (mt + k1 * (1.0 - b)) if idf >= 0.0 else 0.0
+            )
         ub = sum(contribs)
         if ub < theta:
-            return _empty_cell(False)
+            return empty
 
         # --- decode dl block (memoized across queries) ----------------
-        base = int(key[0].as_py()) * span
+        base = block * span
         ddocs = _cached_docs(dlblock.column("docs_vb")[0].as_py())
         dls = _cached_vals(dlblock.column("dls_vb")[0].as_py()).astype(np.float64)
         dl_arr = np.zeros(span, dtype=np.float64)
@@ -173,8 +193,8 @@ def _kernel_factory(term_stats: dict[str, tuple[float, float]], k: int,
         best_partial = 0.0
         for j, ri in enumerate(order):
             if best_partial + suffix_ub[j] < theta and j > 0:
-                return _empty_cell(False)  # no doc here can reach the heap
-            idf, _ = term_stats[rows_term[ri]]
+                return empty  # no doc here can reach the heap
+            idf = idfs[rows_term[ri]]
             docs = _cached_docs(rows_dvb[ri])
             tfs = _cached_vals(rows_tvb[ri]).astype(np.float64)
             off = (docs - np.uint64(base)).astype(np.int64)
@@ -187,7 +207,7 @@ def _kernel_factory(term_stats: dict[str, tuple[float, float]], k: int,
 
         idx = np.nonzero(touched)[0]
         if idx.size == 0:
-            return _empty_cell(False)
+            return empty
         sc = scores[idx]
         # local top-k of this range under the GLOBAL total order
         # (score DESC, doc_int ASC): argpartition alone keeps an arbitrary
@@ -202,8 +222,9 @@ def _kernel_factory(term_stats: dict[str, tuple[float, float]], k: int,
                 heapq.heappush(heap, float(v))
             elif v > heap[0]:
                 heapq.heapreplace(heap, float(v))
-        return pa.table({"doc_int": pa.array((idx + base).astype(np.int64)),
-                         "score": pa.array(sc)})
+        return pa.table({"qid": pa.array(np.full(idx.size, qid, dtype=np.int64)),
+                         "doc_int": pa.array((idx + base).astype(np.int64)),
+                         "score": pa.array(sc)}, schema=schema)
 
     return kernel
 
@@ -219,7 +240,6 @@ def bm25_topk_wand(
     block_span: int = DEFAULT_BLOCK_SPAN,
     docs: DataFrame | None = None,
     term_buckets: int | None = None,
-    prune_dl: bool | str = "auto",
     precollected_trows: list | None = None,
 ) -> DataFrame:
     """-> (doc_int, score) top-k (plus doc_id when ``docs`` given).
@@ -233,60 +253,46 @@ def bm25_topk_wand(
     (one Spark job, bit-identical xxhash64) and applied as a partition
     filter — no separate term_buckets_for round-trip per query.
 
-    ``prune_dl``: restrict the doc-length blocks to the query's posting
-    block ids (broadcast semi-join).  Without it every dl block of the
-    corpus (N/span rows — ~10^8 at 100 TB) is shuffled into the cogroup
-    and dispatched to the Python kernel per query even though ranges
-    with no query postings return empty; with it the per-query work is
-    proportional to the query's posting footprint.  ``"auto"`` (default)
-    decides from the term dfs already collected: a term's posting
-    blocks are at most its df, so ``Σ df`` bounds the pruned set — when
-    that bound isn't well under the corpus's block count the query
-    touches (nearly) every block and the semi-join stages are pure
-    overhead, so the full dl scan is kept (measured: a mid-frequency
-    3-term query at 600k docs lost 2× to the unconditional semi-join).
+    The doc-length blocks are restricted to the query's posting block
+    ids (broadcast semi-join) when ``_should_prune_dl`` holds.  Without
+    it every dl block of the corpus (N/span rows — ~10^8 at 100 TB) is
+    shuffled into the cogroup and dispatched to the Python kernel per
+    query even though ranges with no query postings return empty; with
+    it the per-query work is proportional to the query's posting
+    footprint.  The rule decides from the term dfs already collected: a
+    term's posting blocks are at most its df, so ``Σ df`` bounds the
+    pruned set — when that bound isn't well under the corpus's block
+    count the query touches (nearly) every block and the semi-join
+    stages are pure overhead, so the full dl scan is kept (measured: a
+    mid-frequency 3-term query at 600k docs lost 2× to the
+    unconditional semi-join).
     """
     spark = blocks.sparkSession
     n, avgdl = stats["n_docs"], float(stats["avgdl"])
     qset = sorted(set(query_terms))
-    if precollected_trows is not None:
-        # a router already collected (term, df[, tb]) — reuse it instead
-        # of issuing a second driver job for the same rows
-        qs = set(qset)
-        trows = [r for r in precollected_trows if r.term in qs]
-    else:
-        trows = collect_query_term_rows(terms, qset, blocks, term_buckets)
+    trows = _query_term_rows(terms, qset, blocks, term_buckets, precollected_trows)
     if not trows:
-        out = spark.createDataFrame([], "doc_int long, score double")
-        return out
-    term_stats = {}
-    for r in trows:
-        df = float(r.df)
-        idf = float(np.log2((n - df + 0.5) / (df + 0.5)))
-        term_stats[r.term] = (idf, 0.0)
+        return spark.createDataFrame([], "doc_int long, score double")
+    idfs = {r.term: _idf(n, float(r.df)) for r in trows}
 
     # unique per invocation: a stale heap from a previous query (possibly a
     # different corpus) must never seed this query's pruning threshold
-    import uuid
+    kernel = _kernel_factory({0: idfs}, k, cfg.k1, cfg.b, avgdl, block_span,
+                             uuid.uuid4().hex)
 
-    qkey = uuid.uuid4().hex
-    kernel = _kernel_factory(term_stats, k, cfg.k1, cfg.b, avgdl, block_span, qkey)
-
-    qb = _pruned_blocks(blocks, list(term_stats), trows, term_buckets)
-    if prune_dl == "auto":
-        df_sum = sum(float(r.df) for r in trows)
-        prune_dl = _should_prune_dl(df_sum, n, block_span)
+    qb = _pruned_blocks(blocks, list(idfs), trows, term_buckets)
     dlq = dl_blocks
-    if prune_dl:
-        # broadcast hint is safe: under the auto bound the distinct
-        # block-id set is at most Σ df < n_blocks/2 rows
+    if _should_prune_dl(sum(float(r.df) for r in trows), n, block_span):
+        # broadcast hint is safe: under the bound the distinct block-id
+        # set is at most Σ df < n_blocks/2 rows
         dlq = dl_blocks.join(
             F.broadcast(qb.select("block_id").distinct()), "block_id", "leftsemi"
         )
     ranked = (
         qb.groupBy("block_id")
         .cogroup(dlq.groupBy("block_id"))
-        .applyInArrow(kernel, "doc_int long, score double")
+        .applyInArrow(kernel, "qid long, doc_int long, score double")
+        .drop("qid")
         .orderBy(F.desc("score"), F.asc("doc_int"))
         .limit(k)
     )
@@ -302,84 +308,6 @@ def bm25_topk_wand(
 # ---------------------------------------------------------------------------
 # batched WAND: the whole query set through the pruned kernel in ONE plan
 # ---------------------------------------------------------------------------
-
-def _batch_kernel_factory(stats_by_qid: dict[int, dict[str, float]], k: int,
-                          k1: float, b: float, avgdl: float, span: int, qkey: str):
-    """Arrow-native (``applyInArrow``) — see _kernel_factory."""
-    import pyarrow as pa
-
-    def kernel(key, pblocks, dlblock):
-        if pblocks.num_rows == 0 or dlblock.num_rows == 0:
-            return _empty_cell(True)
-        qid, block = int(key[0].as_py()), int(key[1].as_py())
-        idfs = stats_by_qid[qid]
-        if len(_THRESH) > 4096:
-            _THRESH.clear()
-        heap = _THRESH.setdefault(f"{qkey}:{qid}", [])
-        theta = heap[0] if len(heap) >= k else -np.inf
-
-        rows_term = pblocks.column("term").to_pylist()
-        contribs = []
-        for term, max_tf in zip(rows_term, pblocks.column("max_tf").to_pylist()):
-            idf = idfs[term]
-            mt = float(max_tf)
-            contribs.append(
-                idf * mt * (k1 + 1.0) / (mt + k1 * (1.0 - b)) if idf >= 0.0 else 0.0
-            )
-        ub = sum(contribs)
-        if ub < theta:
-            return _empty_cell(True)
-
-        base = block * span
-        ddocs = _cached_docs(dlblock.column("docs_vb")[0].as_py())
-        dls = _cached_vals(dlblock.column("dls_vb")[0].as_py()).astype(np.float64)
-        dl_arr = np.zeros(span, dtype=np.float64)
-        dl_arr[(ddocs - np.uint64(base)).astype(np.int64)] = dls
-
-        # descending-bound term order + suffix bounds: same in-kernel
-        # early exit as the single-query kernel
-        order = sorted(range(len(contribs)), key=lambda i: -contribs[i])
-        suffix = 0.0
-        suffix_ub = [0.0] * (len(order) + 1)
-        for j in range(len(order) - 1, -1, -1):
-            suffix += contribs[order[j]]
-            suffix_ub[j] = suffix
-        rows_dvb = pblocks.column("docs_vb").to_pylist()
-        rows_tvb = pblocks.column("tfs_vb").to_pylist()
-        scores = np.zeros(span, dtype=np.float64)
-        touched = np.zeros(span, dtype=bool)
-        best_partial = 0.0
-        for j, ri in enumerate(order):
-            if best_partial + suffix_ub[j] < theta and j > 0:
-                return _empty_cell(True)
-            idf = idfs[rows_term[ri]]
-            docs = _cached_docs(rows_dvb[ri])
-            tfs = _cached_vals(rows_tvb[ri]).astype(np.float64)
-            off = (docs - np.uint64(base)).astype(np.int64)
-            dl = dl_arr[off]
-            s = idf * tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dl / avgdl))
-            scores[off] += s
-            touched[off] = True
-            if off.size:
-                best_partial = max(best_partial, float(scores[off].max()))
-        idx = np.nonzero(touched)[0]
-        if idx.size == 0:
-            return _empty_cell(True)
-        sc = scores[idx]
-        if idx.size > k:
-            order = np.lexsort((idx, -sc))[:k]
-            idx, sc = idx[order], sc[order]
-        for v in sc:
-            if len(heap) < k:
-                heapq.heappush(heap, float(v))
-            elif v > heap[0]:
-                heapq.heapreplace(heap, float(v))
-        return pa.table({"qid": pa.array(np.full(idx.size, qid, dtype=np.int64)),
-                         "doc_int": pa.array((idx + base).astype(np.int64)),
-                         "score": pa.array(sc)})
-
-    return kernel
-
 
 def batch_bm25_topk_wand(
     blocks: DataFrame,
@@ -411,11 +339,8 @@ def batch_bm25_topk_wand(
     spark = blocks.sparkSession
     n, avgdl = stats["n_docs"], float(stats["avgdl"])
     union_terms = sorted({t for ts in queries.values() for t in ts})
-    if precollected_trows is not None:
-        uset = set(union_terms)
-        trows = [r for r in precollected_trows if r.term in uset]
-    else:
-        trows = collect_query_term_rows(terms, union_terms, blocks, term_buckets)
+    trows = _query_term_rows(terms, union_terms, blocks, term_buckets,
+                             precollected_trows)
     dfmap = {r.term: float(r.df) for r in trows}
     stats_by_qid: dict[int, dict[str, float]] = {}
     pairs = []
@@ -423,18 +348,13 @@ def batch_bm25_topk_wand(
         present = sorted({t for t in ts if t in dfmap})
         if not present:
             continue
-        stats_by_qid[qid] = {
-            t: float(np.log2((n - dfmap[t] + 0.5) / (dfmap[t] + 0.5))) for t in present
-        }
+        stats_by_qid[qid] = {t: _idf(n, dfmap[t]) for t in present}
         pairs += [(qid, t) for t in present]
     if not pairs:
         return spark.createDataFrame([], "qid long, doc_int long, rank long, score double")
 
-    import uuid
-
-    qkey = uuid.uuid4().hex
-    kernel = _batch_kernel_factory(stats_by_qid, k, cfg.k1, cfg.b, avgdl,
-                                   block_span, qkey)
+    kernel = _kernel_factory(stats_by_qid, k, cfg.k1, cfg.b, avgdl, block_span,
+                             uuid.uuid4().hex)
 
     qb = _pruned_blocks(blocks, union_terms, trows, term_buckets)
     qt = spark.createDataFrame(pairs, "qid long, term string")
@@ -468,6 +388,46 @@ def batch_bm25_topk_wand(
 # cost-based routing: exhaustive join vs block-max WAND per query
 # ---------------------------------------------------------------------------
 
+def _plan_routes(index, blocks: DataFrame, queries: dict[int, list[str]],
+                 term_buckets: int | None, wand_min_postings: int):
+    """ONE driver job carries the routing decision AND the WAND path's
+    term stats: (term, df[, tb]) rows for every distinct query term.
+    Each query routes on its ``Σ df`` (the exact posting row count the
+    exhaustive plan must score): >= ``wand_min_postings`` -> "wand",
+    below -> "exhaustive".  Returns (trows, {qid: route})."""
+    union_terms = sorted({t for ts in queries.values() for t in ts})
+    trows = collect_query_term_rows(index.terms, union_terms, blocks, term_buckets)
+    dfmap = {r.term: int(r.df) for r in trows}
+    routes = {
+        qid: ("wand" if sum(dfmap.get(t, 0) for t in ts) >= wand_min_postings
+              else "exhaustive")
+        for qid, ts in queries.items()
+    }
+    return trows, routes
+
+
+def _prefiltered(index, qterms: list[str]) -> IndexTables:
+    """The index with its postings scan pre-filtered to ``qterms``.  A
+    no-op on values (the scoring join restricts to these terms anyway),
+    but the literal isin runs in the scan stage ahead of the broadcast
+    probe and prunes parquet row groups on term-sorted layouts: it
+    measured 1.7x on the 436-query exhaustive half of Run_B6 (4.5 ->
+    2.7 s, identical output — r7 A/B)."""
+    return IndexTables(
+        postings=index.postings.filter(F.col("term").isin(qterms)),
+        docs=index.docs, terms=index.terms, stats=index.stats,
+        term_dict=index.term_dict)
+
+
+def _with_doc_ids(index, ranked: DataFrame) -> DataFrame:
+    """Add the index's ``doc_id`` next to the kernel's ``doc_int``: the
+    same value on integer-keyed indexes (``int_doc_ids``), a join to
+    ``docs`` otherwise.  The join does not keep row order."""
+    if index.stats.get("int_doc_ids"):
+        return ranked.withColumn("doc_id", F.col("doc_int"))
+    return ranked.join(index.docs.select("doc_int", "doc_id"), "doc_int", "left")
+
+
 def route_bm25(
     index,
     blocks: DataFrame,
@@ -500,35 +460,25 @@ def route_bm25(
     from . import scoring
 
     spark = query_terms.sparkSession
-    # ONE driver job carries the routing decision AND the WAND path's
-    # term stats: distinct query terms joined to the vocabulary
     qset = sorted({r.term for r in query_terms.select("term").distinct().collect()})
-    trows = collect_query_term_rows(index.terms, qset, blocks, term_buckets)
-    total_postings = sum(int(r.df) for r in trows)
-    if total_postings >= wand_min_postings:
-        out = bm25_topk_wand(blocks, dl_blocks, index.terms, index.stats,
-                             qset, k=k, cfg=cfg, block_span=block_span,
-                             docs=None if index.stats.get("int_doc_ids") else index.docs,
-                             term_buckets=term_buckets,
-                             precollected_trows=trows)
-        if index.stats.get("int_doc_ids"):
-            out = out.select(F.col("doc_int").alias("doc_id"), "score")
-        else:
-            out = out.select("doc_id", "score")
+    trows, routes = _plan_routes(index, blocks, {0: qset}, term_buckets,
+                                 wand_min_postings)
+    if routes[0] == "wand":
+        ranked = bm25_topk_wand(blocks, dl_blocks, index.terms, index.stats,
+                                qset, k=k, cfg=cfg, block_span=block_span,
+                                term_buckets=term_buckets,
+                                precollected_trows=trows)
+        out = (
+            _with_doc_ids(index, ranked)
+            .orderBy(F.desc("score"), F.asc("doc_int"))
+            .select("doc_id", "score")
+        )
         return out, "wand"
     # deduplicated terms on the exhaustive route too: bm25_search sums
     # one tscore per query_terms ROW, so duplicate term rows would
     # double-count on this route only — routing must stay value-invisible
     qt = spark.createDataFrame([(t,) for t in qset], "term string")
-    # pre-filter the postings scan to the query's term set: the inner
-    # join restricts to exactly these terms anyway, so the literal isin
-    # is a no-op on values but runs ahead of the broadcast probe in the
-    # scan stage (and prunes parquet row groups on term-sorted layouts)
-    ix_f = IndexTables(
-        postings=index.postings.filter(F.col("term").isin(qset)),
-        docs=index.docs, terms=index.terms, stats=index.stats,
-        term_dict=index.term_dict)
-    return scoring.bm25_search(ix_f, qt, k=k, cfg=cfg), "exhaustive"
+    return scoring.bm25_search(_prefiltered(index, qset), qt, k=k, cfg=cfg), "exhaustive"
 
 
 def route_batch_bm25(
@@ -560,23 +510,14 @@ def route_batch_bm25(
     (result, {qid: route}).  Duplicate (qid, term) rows are collapsed
     before either path (BM25 counts a term once per query —
     OkapiBM25_FR.java:330-404)."""
-    from . import scoring  # noqa: F401  (parity with route_bm25 imports)
     from .batch import batch_bm25_search
 
     spark = query_terms.sparkSession
-    qpairs = [(int(r.qid), r.term) for r in
-              query_terms.select("qid", "term").distinct().collect()]
     queries: dict[int, list[str]] = {}
-    for qid, t in qpairs:
-        queries.setdefault(qid, []).append(t)
-    union_terms = sorted({t for _, t in qpairs})
-    trows = collect_query_term_rows(index.terms, union_terms, blocks, term_buckets)
-    dfmap = {r.term: int(r.df) for r in trows}
-    routes = {
-        qid: ("wand" if sum(dfmap.get(t, 0) for t in ts) >= wand_min_postings
-              else "exhaustive")
-        for qid, ts in queries.items()
-    }
+    for r in query_terms.select("qid", "term").distinct().collect():
+        queries.setdefault(int(r.qid), []).append(r.term)
+    trows, routes = _plan_routes(index, blocks, queries, term_buckets,
+                                 wand_min_postings)
     parts = []
     wand_queries = {q: ts for q, ts in queries.items() if routes[q] == "wand"}
     if wand_queries:
@@ -585,31 +526,15 @@ def route_batch_bm25(
                                  block_span=block_span,
                                  term_buckets=term_buckets,
                                  precollected_trows=trows)
-        if index.stats.get("int_doc_ids"):
-            w = w.select("qid", F.col("doc_int").alias("doc_id"), "rank", "score")
-        else:
-            w = (
-                w.join(index.docs.select("doc_int", "doc_id"), "doc_int", "left")
-                .select("qid", "doc_id", "rank", "score")
-            )
-        parts.append(w)
+        parts.append(_with_doc_ids(index, w).select("qid", "doc_id", "rank", "score"))
     ex_qids = [q for q, r in routes.items() if r == "exhaustive"]
     if ex_qids:
         qt = spark.createDataFrame(
             [(q, t, 1.0) for q in ex_qids for t in queries[q]],
             "qid long, term string, qtf double",
         )
-        # pre-filter the postings scan to the exhaustive union's term
-        # set (a no-op on values — the inner join restricts to these
-        # terms anyway): the literal isin runs in the scan stage ahead
-        # of the broadcast probe and measured 1.7x on the 436-query
-        # half (4.5 -> 2.7 s, identical output — r7 A/B)
         ex_terms = sorted({t for q in ex_qids for t in queries[q]})
-        ix_f = IndexTables(
-            postings=index.postings.filter(F.col("term").isin(ex_terms)),
-            docs=index.docs, terms=index.terms, stats=index.stats,
-            term_dict=index.term_dict)
-        parts.append(batch_bm25_search(ix_f, qt, k=k, cfg=cfg))
+        parts.append(batch_bm25_search(_prefiltered(index, ex_terms), qt, k=k, cfg=cfg))
     if not parts:
         return (spark.createDataFrame([], "qid long, doc_id long, rank long, score double"),
                 routes)

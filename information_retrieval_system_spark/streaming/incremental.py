@@ -103,7 +103,10 @@ def compact_delta_index(spark: SparkSession, delta_dir: str, out_dir: str,
     snapshot log instead of a bare directory."""
     from ..index.builder import read_index, write_index
 
-    tables, cached = _compacted_tables(spark, delta_dir)
+    postings, docs, _ = _read_deltas(spark, delta_dir)
+    if docs is None:
+        raise FileNotFoundError(f"no delta batches under {delta_dir} to compact")
+    tables, cached = _tables_from_view(postings, docs)
     try:
         write_index(tables, out_dir, cfg)
     finally:
@@ -117,13 +120,20 @@ def compact_to_snapshot(spark: SparkSession, delta_dir: str, snapshot_root: str,
     """Compaction committed as an immutable SNAPSHOT (operation
     "compaction" in the lineage log): the streaming deltas become a new
     version of the serving index without disturbing any prior snapshot
-    a reader may hold.  Returns the snapshot id."""
+    a reader may hold.  The commit records the highest delta batch it
+    read as ``merge_watermark``, so a later ``merge_into_snapshot`` over
+    the same delta dir merges only the batches that landed after it.
+    Returns the snapshot id."""
     from ..index.snapshots import commit_snapshot
 
-    tables, cached = _compacted_tables(spark, delta_dir)
+    postings, docs, wm = _read_deltas(spark, delta_dir)
+    if docs is None:
+        raise FileNotFoundError(f"no delta batches under {delta_dir} to compact")
+    tables, cached = _tables_from_view(postings, docs)
     try:
         return commit_snapshot(tables, snapshot_root, cfg,
-                               operation="compaction", note=note)
+                               operation="compaction", note=note,
+                               extra={"merge_watermark": wm})
     finally:
         cached.unpersist()
 
@@ -180,12 +190,30 @@ def _tables_from_view(postings: DataFrame, docs: DataFrame):
     return IndexTables(postings=p, docs=docs_full, terms=terms, stats=stats), postings
 
 
-def _compacted_tables(spark: SparkSession, delta_dir: str):
-    postings = spark.read.parquet(
-        os.path.join(delta_dir, "postings_delta")).drop("batch_id")
-    docs = spark.read.parquet(
-        os.path.join(delta_dir, "docs_delta")).drop("batch_id")
-    return _tables_from_view(postings, docs)
+def _read_deltas(spark: SparkSession, delta_dir: str, after: int = -1):
+    """The delta batches with ``batch_id > after`` ->
+    ``(postings(term, doc_id, tf), docs(doc_id, length), watermark)``,
+    the watermark being the highest ``batch_id`` read (None when no
+    batch is past ``after``, or no delta dir exists yet).
+
+    The watermark comes from the DOCS deltas, not the postings: every
+    processed batch writes docs_delta rows, but a batch whose docs all
+    tokenize to zero terms writes NO postings rows — deriving the
+    watermark from postings would leave such a batch above the recorded
+    mark and re-merge its doc rows next call (double-counted
+    n_docs/avgdl/norms)."""
+    p_dir = os.path.join(delta_dir, "postings_delta")
+    d_dir = os.path.join(delta_dir, "docs_delta")
+    if not os.path.isdir(d_dir):  # stream drained zero batches
+        return None, None, None
+    if os.path.isdir(p_dir):
+        dp = spark.read.parquet(p_dir).filter(F.col("batch_id") > after)
+    else:  # every batch so far tokenized to zero terms: docs only
+        dp = spark.createDataFrame(
+            [], "term string, doc_id long, tf int, batch_id long")
+    dd = spark.read.parquet(d_dir).filter(F.col("batch_id") > after)
+    wm = dd.agg(F.max("batch_id").alias("m")).collect()[0]["m"]
+    return dp.drop("batch_id"), dd.drop("batch_id"), None if wm is None else int(wm)
 
 
 def merge_into_snapshot(
@@ -210,11 +238,11 @@ def merge_into_snapshot(
     documents); both sides must use integer doc keys (the builder's
     doc_int == doc_id fast path).
 
-    RE-MERGEABLE: each merge commit records the highest delta
-    ``batch_id`` it consumed (``merge_watermark`` on the log entry), and
-    the next merge only reads ``batch_id > watermark`` — so calling this
-    repeatedly as the stream keeps appending never double-counts an
-    already-merged batch.  With no deltas past the watermark (or no
+    RE-MERGEABLE: each merge (and compaction) commit records the
+    highest delta ``batch_id`` it consumed (``merge_watermark`` on the
+    log entry), and the next merge only reads ``batch_id > watermark``
+    — so calling this repeatedly as the stream keeps appending never
+    double-counts an already-merged batch.  With no deltas past the watermark (or no
     delta dir yet) it is a NO-OP returning the current snapshot id.
 
     The watermark is sound within ONE streaming checkpoint lineage:
@@ -230,22 +258,7 @@ def merge_into_snapshot(
     if not log:
         raise FileNotFoundError(f"no snapshots at {snapshot_root} to merge into")
     wm = max((e.get("merge_watermark", -1) for e in log), default=-1)
-    p_dir = os.path.join(delta_dir, "postings_delta")
-    d_dir = os.path.join(delta_dir, "docs_delta")
-    if not os.path.isdir(d_dir):  # stream drained zero batches: no-op
-        return log[-1]["id"]
-    if os.path.isdir(p_dir):
-        dp = spark.read.parquet(p_dir).filter(F.col("batch_id") > wm)
-    else:  # every batch so far tokenized to zero terms: docs only
-        dp = spark.createDataFrame(
-            [], "term string, doc_id long, tf int, batch_id long")
-    dd = spark.read.parquet(d_dir).filter(F.col("batch_id") > wm)
-    # Watermark advances on DOCS, not postings: every processed batch
-    # writes docs_delta rows, but a batch whose docs all tokenize to
-    # zero terms writes NO postings rows — deriving the watermark from
-    # dp would leave such a batch above the recorded mark and re-merge
-    # its doc rows next call (double-counted n_docs/avgdl/norms).
-    new_wm = dd.agg(F.max("batch_id").alias("m")).collect()[0]["m"]
+    dp, dd, new_wm = _read_deltas(spark, delta_dir, after=wm)
     if new_wm is None:  # nothing new past the watermark: no-op
         return log[-1]["id"]
     cur = read_snapshot(spark, snapshot_root)
@@ -257,7 +270,7 @@ def merge_into_snapshot(
     try:
         return commit_snapshot(tables, snapshot_root, cfg,
                                operation="merge-append", note=note,
-                               extra={"merge_watermark": int(new_wm)})
+                               extra={"merge_watermark": new_wm})
     finally:
         cached.unpersist()
 

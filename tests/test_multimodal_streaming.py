@@ -223,26 +223,27 @@ def test_stream_sessionization_event_time_timeout(spark, tmp_path):
 def test_compact_to_snapshot_lineage(spark, tmp_path):
     """Streaming deltas -> compaction committed as an immutable
     snapshot: the lineage log records the operation, and the snapshot
-    read matches a batch aggregation of the same deltas."""
+    read matches a batch aggregation of the same deltas.  A batch that
+    lands after the compaction is merged on its own: the compacted
+    batches are never merged a second time."""
     from pyspark.sql import functions as F
 
     from information_retrieval_system_spark.index.snapshots import (
         read_snapshot, snapshot_lineage)
     from information_retrieval_system_spark.streaming.incremental import (
-        compact_to_snapshot)
+        compact_to_snapshot, merge_into_snapshot)
 
     delta = str(tmp_path / "delta")
-    # two hand-written delta batches (disjoint docs, like foreachBatch)
-    p1 = [("alpha", 1, 2), ("beta", 1, 1), ("alpha", 2, 1)]
-    p2 = [("beta", 3, 4), ("gamma", 3, 1)]
-    for bid, rows in enumerate([p1, p2]):
-        spark.createDataFrame(rows, "term string, doc_id long, tf int").withColumn(
+
+    def land(bid, postings, docs):  # one delta batch, like foreachBatch
+        spark.createDataFrame(postings, "term string, doc_id long, tf int").withColumn(
             "batch_id", F.lit(bid)).write.mode("append").parquet(f"{delta}/postings_delta")
-    d1 = [(1, 3), (2, 1)]
-    d2 = [(3, 5)]
-    for bid, rows in enumerate([d1, d2]):
-        spark.createDataFrame(rows, "doc_id long, length long").withColumn(
+        spark.createDataFrame(docs, "doc_id long, length long").withColumn(
             "batch_id", F.lit(bid)).write.mode("append").parquet(f"{delta}/docs_delta")
+
+    # two batches with disjoint docs
+    land(0, [("alpha", 1, 2), ("beta", 1, 1), ("alpha", 2, 1)], [(1, 3), (2, 1)])
+    land(1, [("beta", 3, 4), ("gamma", 3, 1)], [(3, 5)])
 
     root = str(tmp_path / "snaps")
     sid = compact_to_snapshot(spark, delta, root)
@@ -252,6 +253,14 @@ def test_compact_to_snapshot_lineage(spark, tmp_path):
     terms = {r.term: (r.df, r.cf) for r in ix.terms.collect()}
     assert terms == {"alpha": (2, 3), "beta": (2, 5), "gamma": (1, 1)}
     assert ix.stats["n_docs"] == 3 and ix.stats["int_doc_ids"] is True
+
+    land(2, [("gamma", 4, 2)], [(4, 2)])
+    merged = merge_into_snapshot(spark, root, delta)
+    assert merged > sid
+    ix = read_snapshot(spark, root, merged)
+    terms = {r.term: (r.df, r.cf) for r in ix.terms.collect()}
+    assert terms == {"alpha": (2, 3), "beta": (2, 5), "gamma": (2, 3)}
+    assert ix.stats["n_docs"] == 4 and ix.stats["total_len"] == 11
 
 
 def test_parse_image_header_roundtrip():

@@ -68,23 +68,31 @@ def test_wand_equals_exhaustive(blocked, spark, query, k):
 
 
 def test_wand_dl_side_semijoin_pruned(blocked, spark):
-    """With prune_dl on, the dl_blocks side of the cogroup must be
-    restricted to the query's posting block ids (a LeftSemi join in the
-    plan) — without it every query shuffles N/span dl rows,
-    corpus-proportional work.  Results identical either way."""
-    cfg, index, blocks, dl_blocks = blocked
-    qt = analyze_query_terms(spark, "spark join merge", cfg)
-    terms = [r.term for r in qt.collect()]
-    out = bm25_topk_wand(blocks, dl_blocks, index.terms, index.stats,
-                         terms, k=10, cfg=cfg, block_span=SPAN, prune_dl=True)
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "LeftSemi" in plan
-    # and the opt-out really opts out
-    out2 = bm25_topk_wand(blocks, dl_blocks, index.terms, index.stats,
-                          terms, k=10, cfg=cfg, block_span=SPAN, prune_dl=False)
-    assert "LeftSemi" not in out2._jdf.queryExecution().optimizedPlan().toString()
-    assert [(r.doc_int, round(r.score, 9)) for r in out.collect()] == \
-           [(r.doc_int, round(r.score, 9)) for r in out2.collect()]
+    """The dl_blocks side of the cogroup is restricted to the query's
+    posting block ids (a LeftSemi join in the plan) exactly when
+    ``_should_prune_dl`` holds: a rare-term query prunes, a head-term
+    query keeps the full dl scan.  Results equal exhaustive scoring
+    either way."""
+    from information_retrieval_system_spark.query.wand import _should_prune_dl
+
+    cfg, index, _, _ = blocked
+    span = 8  # 63 blocks over 500 docs: the rule prunes at Σ df <= 31
+    blocks = build_block_postings(index.postings, block_span=span)
+    dl_blocks = build_dl_blocks(index.docs, block_span=span)
+    df = {r.term: r.df for r in index.terms.collect()}
+    n = index.stats["n_docs"]
+    for query, pruned in [("dup", True), ("spark join merge", False)]:
+        qt = analyze_query_terms(spark, query, cfg)
+        terms = [r.term for r in qt.collect()]
+        assert _should_prune_dl(sum(df[t] for t in terms), n, span) is pruned
+        out = bm25_topk_wand(blocks, dl_blocks, index.terms, index.stats,
+                             terms, k=10, cfg=cfg, block_span=span,
+                             docs=index.docs)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert ("LeftSemi" in plan) is pruned, query
+        exact = scoring.bm25_search(index, qt, k=10, cfg=cfg).collect()
+        assert [(r.doc_id, round(r.score, 9)) for r in out.collect()] == \
+               [(r.doc_id, round(r.score, 9)) for r in exact]
 
 
 def test_should_prune_dl_auto_bound():
@@ -278,3 +286,106 @@ def test_corrected_routed_fusion_mix_and_corrections(spark):
     assert 4 not in routes                       # dropped qid never routed
     assert set(routes.values()) == {"wand", "exhaustive"}
     assert res.select("qid").distinct().count() == 4
+
+
+@pytest.fixture(scope="module")
+def string_keyed(spark, sf_small):
+    """An index whose doc ids are strings (``int_doc_ids`` False), so
+    the routers must join ``docs`` to map doc_int back to doc_id."""
+    cfg = EngineConfig()
+    docs_df = spark.read.parquet(f"{sf_small}/documents.parquet").withColumn(
+        "doc_id", F.concat(F.lit("d"), F.col("doc_id").cast("string")))
+    index = build_index(docs_df, cfg, doc_col="doc_id", text_col="text")
+    assert index.stats["int_doc_ids"] is False
+    blocks = build_block_postings(index.postings, block_span=SPAN).cache()
+    dl_blocks = build_dl_blocks(index.docs, block_span=SPAN).cache()
+    return cfg, index, blocks, dl_blocks
+
+
+@pytest.mark.parametrize("min_postings,route", [(1, "wand"), (10**9, "exhaustive")])
+def test_routes_map_string_doc_ids(string_keyed, spark, min_postings, route):
+    """Both routers return the index's string doc ids, equal to the
+    exhaustive scorers, on either route."""
+    from information_retrieval_system_spark.query.batch import batch_bm25_search
+    from information_retrieval_system_spark.query.wand import (
+        route_batch_bm25, route_bm25)
+
+    cfg, index, blocks, dl_blocks = string_keyed
+    qt = analyze_query_terms(spark, "spark join merge", cfg)
+    got, got_route = route_bm25(index, blocks, dl_blocks, qt, k=10, cfg=cfg,
+                                block_span=SPAN, wand_min_postings=min_postings)
+    assert got_route == route
+    want = scoring.bm25_search(index, qt, k=10, cfg=cfg).collect()
+    assert [(r.doc_id, round(r.score, 9)) for r in got.collect()] == \
+           [(r.doc_id, round(r.score, 9)) for r in want]
+    assert len(want) == 10 and isinstance(want[0].doc_id, str)
+
+    bqt = spark.createDataFrame(
+        [(1, "spark", 1.0), (1, "join", 1.0), (2, "vector", 1.0),
+         (2, "stream", 1.0), (3, "zzznotfound", 1.0)],
+        "qid long, term string, qtf double")
+    res, routes = route_batch_bm25(index, blocks, dl_blocks, bqt, k=10, cfg=cfg,
+                                   block_span=SPAN, wand_min_postings=min_postings)
+    assert routes[1] == routes[2] == route  # qid 3 (Σ df 0) is always exhaustive
+    ref = batch_bm25_search(index, bqt, k=10, cfg=cfg)
+    key = lambda rs: sorted((r.qid, r.rank, r.doc_id, round(r.score, 9)) for r in rs)  # noqa: E731
+    assert key(res.collect()) == key(ref.collect()) and res.count() == 20
+
+
+def test_kernel_on_arrow_cells():
+    """The block-max kernel without Spark: hand-built cogroup cells for
+    both key shapes — ``(block_id,)`` scores as qid 0, ``(qid,
+    block_id)`` carries the qid — equal plain BM25 arithmetic; a cell
+    whose bound is below the threshold an earlier cell primed returns
+    zero rows with the ``(qid, doc_int, score)`` schema."""
+    import uuid
+
+    import numpy as np
+    import pyarrow as pa
+
+    from information_retrieval_system_spark.index.compression import (
+        delta_encode, vbyte_encode)
+    from information_retrieval_system_spark.query.wand import _kernel_factory
+
+    k1, b, avgdl, span = 1.2, 0.75, 2.0, 4
+    idfs = {"a": 1.0, "b": 0.5}
+
+    def cell(*postings):  # (term, docs, tfs) per posting block
+        return pa.table({
+            "term": [t for t, _, _ in postings],
+            "max_tf": [max(tfs) for _, _, tfs in postings],
+            "docs_vb": [vbyte_encode(delta_encode(np.array(d))) for _, d, _ in postings],
+            "tfs_vb": [vbyte_encode(np.array(tfs)) for _, _, tfs in postings]})
+
+    def dl_cell(docs, dls):
+        return pa.table({"docs_vb": [vbyte_encode(delta_encode(np.array(docs)))],
+                         "dls_vb": [vbyte_encode(np.array(dls))]})
+
+    def bm25(idf, tf, dl):
+        return idf * tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl / avgdl))
+
+    schema = pa.schema([("qid", pa.int64()), ("doc_int", pa.int64()),
+                        ("score", pa.float64())])
+    # block 1 = docs 4..7; dl 2, 2, 3, 1
+    hot = cell(("a", [4, 6], [1, 3]), ("b", [5, 6], [2, 1]))
+    hot_dl = dl_cell([4, 5, 6, 7], [2, 2, 3, 1])
+    want = sorted([(6, bm25(1.0, 3, 3) + bm25(0.5, 1, 3)), (5, bm25(0.5, 2, 2)),
+                   (4, bm25(1.0, 1, 2))], key=lambda x: -x[1])[:2]
+    # block 2 = docs 8..11, bound 0.5 * 1*(k1+1)/(1+k1*(1-b)) below the
+    # k-th best score of block 1
+    cold = cell(("b", [9], [1]))
+    cold_dl = dl_cell([8, 9], [1, 1])
+    assert 0.5 * (k1 + 1) / (1 + k1 * (1 - b)) < want[-1][1]
+
+    def key(*vals):  # a cogroup key as applyInArrow passes it
+        return tuple(pa.scalar(v, pa.int64()) for v in vals)
+
+    for qid, hot_key, cold_key in [(0, key(1), key(2)), (7, key(7, 1), key(7, 2))]:
+        kernel = _kernel_factory({qid: idfs}, 2, k1, b, avgdl, span, uuid.uuid4().hex)
+        out = kernel(hot_key, hot, hot_dl)
+        assert out.schema == schema
+        assert out.column("qid").to_pylist() == [qid, qid]
+        assert out.column("doc_int").to_pylist() == [d for d, _ in want]
+        assert np.allclose(out.column("score").to_pylist(), [s for _, s in want])
+        pruned = kernel(cold_key, cold, cold_dl)
+        assert pruned.num_rows == 0 and pruned.schema == schema
